@@ -44,7 +44,7 @@ object SparkEntry {
   /** One entry per implemented operator from SURVEY.md §2 (+ §7.4 extension
     * surface: text analysis, dedup family, similarity search, multimodal).
     */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
     (ForexQueries.queries ++ IndicatorQueries.queries ++ TextQueries.queries ++
       DedupQueries.queries ++ SimilarityQueries.queries ++ MediaQueries.queries ++
       RelationalQueries.queries ++ SamplingQueries.queries ++
@@ -57,7 +57,7 @@ object SparkEntry {
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
+  val oracleSql: Map[String, String] =
     ForexQueries.oracleSql ++ IndicatorQueries.oracleSql ++
       TextQueries.oracleSql ++ DedupQueries.oracleSql ++
       SimilarityQueries.oracleSql ++ MediaQueries.oracleSql ++

@@ -1,8 +1,9 @@
 package graft.forex
 
 import java.sql.Timestamp
+import java.time.LocalDate
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.store.IncrementalStore
@@ -71,9 +72,7 @@ object ForexIncremental {
 
   /** Single-day gold backfill: recompute every candle-day partition a change
     * to `date`'s silver data can reach — [d-1, d+49] (see
-    * BackfillForwardDays) — feeding the candle aggregation the trailing
-    * lookback window so the EARLIEST rewritten day's ROWS-frame SMAs see
-    * their preceding candles. This mirrors the reference's incremental run,
+    * BackfillForwardDays). This mirrors the reference's incremental run,
     * which re-merges its whole 60-day lookback window every batch
     * (fct_eurusd_timeframes.sql:25-29) and therefore repairs neighbors for
     * free; rewriting only day d would leave d-1's shifted candles and the
@@ -83,45 +82,48 @@ object ForexIncremental {
     */
   def runGoldBackfill(
       spark: SparkSession, silverDir: String, goldDir: String,
-      date: java.time.LocalDate,
-      now: Timestamp = new Timestamp(0L)): Unit = {
-    val first = date.minusDays(1)
-    val last = date.plusDays(BackfillForwardDays)
-    val start = new Timestamp(
-      java.sql.Date.valueOf(first).getTime - LookbackDays * 86400000L)
-    // include day last+1 ticks: shifted buckets (tz +2h) put early-next-day
-    // ticks into day-`last` candles; candle_start <= tick ts, so ticks can
-    // never contribute to an EARLIER day than `start` allows
-    val readEnd = java.sql.Date.valueOf(last.plusDays(1))
-    val silver = IncrementalStore.readTable(spark, silverDir)
-      .select("observed_at", "open_price", "high_price", "low_price", "close_price")
-      .filter(col("observed_at") >= lit(start) &&
-        to_date(col("observed_at")) <= lit(readEnd))
-    val batch = ForexPipeline.gold(silver)
-      .filter(to_date(col("candle_start"))
-        .between(lit(java.sql.Date.valueOf(first)), lit(java.sql.Date.valueOf(last))))
-      .withColumn("dbt_updated_at", lit(now))
-    IncrementalStore.overwriteDayPartitions(
-      batch, goldDir, tsCol = "candle_start", clusterBy = Seq("timeframe"))
-  }
+      date: LocalDate,
+      now: Timestamp = new Timestamp(0L)): Unit =
+    rewriteGoldDays(spark, silverDir, goldDir,
+      Some(date.minusDays(1)), Some(date.plusDays(BackfillForwardDays)), now)
 
-  /** One gold batch: recompute candles over the trailing lookback window and
-    * replace the touched candle-day partitions (clustered by timeframe, the
-    * reference's `cluster_by`).
+  /** One gold batch: recompute the candle days new silver ticks can reach
+    * and replace those day-partitions (clustered by timeframe, the
+    * reference's `cluster_by`). New ticks are later than every tick gold
+    * has seen, so they land on the gold watermark's day or after it — and,
+    * through the +2h shift, on the day before it (see BackfillForwardDays):
+    * the rewrite is [day(watermark) - 1, ∞). No gold yet: everything.
     */
   def runGold(
       spark: SparkSession, silverDir: String, goldDir: String,
       now: Timestamp = new Timestamp(0L)): Unit = {
+    val zone = java.time.ZoneId.of(spark.conf.get("spark.sql.session.timeZone"))
+    val first = IncrementalStore.highWatermark(spark, goldDir, "candle_start")
+      .map(_.toInstant.atZone(zone).toLocalDate.minusDays(1))
+    rewriteGoldDays(spark, silverDir, goldDir, first, None, now)
+  }
+
+  /** Recompute gold for candle days [first, last] (None: unbounded) and
+    * replace exactly those day-partitions. Silver is read from LookbackDays
+    * before `first`, so the earliest rewritten day's ROWS-frame SMAs see
+    * their preceding candles, through the day after `last`: shifted buckets
+    * (tz +2h) put early-next-day ticks into day-`last` candles. Candles
+    * before `first` are computed from a partial lookback and dropped, never
+    * written. Both bounds are silver partition filters.
+    */
+  private def rewriteGoldDays(
+      spark: SparkSession, silverDir: String, goldDir: String,
+      first: Option[LocalDate], last: Option[LocalDate], now: Timestamp): Unit = {
+    def day(d: LocalDate) = lit(java.sql.Date.valueOf(d))
+    def between(c: Column, lo: Option[LocalDate], hi: Option[LocalDate]) =
+      lo.fold(lit(true))(d => c >= day(d)) && hi.fold(lit(true))(d => c <= day(d))
     val silver = IncrementalStore.readTable(spark, silverDir)
+      .filter(between(col(IncrementalStore.PartitionCol),
+        first.map(_.minusDays(LookbackDays)), last.map(_.plusDays(1))))
       .select("observed_at", "open_price", "high_price", "low_price", "close_price")
-    val wm = IncrementalStore.highWatermark(spark, goldDir, "candle_start")
-    val src = wm match {
-      case Some(w) =>
-        val start = new Timestamp(w.getTime - LookbackDays * 86400000L)
-        silver.filter(col("observed_at") >= lit(start))
-      case None => silver
-    }
-    val batch = ForexPipeline.gold(src).withColumn("dbt_updated_at", lit(now))
+    val batch = ForexPipeline.gold(silver)
+      .filter(between(to_date(col("candle_start")), first, last))
+      .withColumn("dbt_updated_at", lit(now))
     IncrementalStore.overwriteDayPartitions(
       batch, goldDir, tsCol = "candle_start", clusterBy = Seq("timeframe"))
   }

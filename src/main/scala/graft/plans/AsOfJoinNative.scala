@@ -190,19 +190,6 @@ case class AsOfJoinExec(
 
 object AsOfJoinNative {
 
-  /** Register the strategy on a session (idempotent) — the runtime
-    * counterpart of `injectPlannerStrategy` for sessions the library did
-    * not build (e.g. the driver-owned one).
-    */
-  def ensureStrategy(spark: org.apache.spark.sql.SparkSession): Unit = {
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
-    if (!spark.experimental.extraOptimizations.contains(AsOfJoinPruningRule))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ AsOfJoinPruningRule
-  }
-
   /** Column-API builder mirroring [[graft.relational.AsOfJoin.backward]].
     * The right side is re-projected through fresh aliases so a left and
     * right derived from the same base relation cannot collide on
@@ -213,7 +200,7 @@ object AsOfJoinNative {
       leftTs: String, rightTs: String,
       keys: Seq[String], rightPayload: Seq[String]): DataFrame = {
     val spark = left.sparkSession
-    ensureStrategy(spark)
+    graft.GraftExtensions.install(spark)
     val rPrep = right.select(
       keys.map(k => col(k).as(s"__rk_$k")) ++
         rightPayload.map(p => col(p).as(s"__rp_$p")) :+

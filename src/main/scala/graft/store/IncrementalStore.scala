@@ -82,11 +82,13 @@ object IncrementalStore {
   }
 
   private def write(arranged: DataFrame, target: String): Unit = {
-    val spark = arranged.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+    arranged.sparkSession.conf
+      .set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+    // a per-write option, not the session conf: a later overwrite elsewhere
+    // in the session must keep its own (static) semantics
     arranged.write
       .mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
       .partitionBy(PartitionCol)
       .option("compression", "snappy")
       .parquet(target)

@@ -107,4 +107,31 @@ class IncrementalSpec extends SparkSpec {
     assert(a === b)
     assert(a.nonEmpty)
   }
+
+  /** `days` days of synthetic ticks (one every 20 minutes from 2024-01-01
+    * UTC) — longer than the 60-day gold lookback, which the test data is
+    * not.
+    */
+  private def longHistory(days: Int): DataFrame =
+    spark.range(days * 72L).select(
+      col("id").as("event_id"),
+      timestamp_seconds(lit(1704067200L) + col("id") * 1200L).as("ts"),
+      (lit(1.1) + sin(col("id") / 50.0) / 100.0).as("value"))
+
+  test("gold: daily runs past the 60-day lookback equal one-shot recompute") {
+    val (silverInc, goldInc, silverOnce, goldOnce) = (tmp(), tmp(), tmp(), tmp())
+    val events = longHistory(75)
+    def before(day: Int) = new Timestamp(1704067200000L + day * 86400000L)
+    // bootstrap 72 days, then land one day per run
+    for (day <- 72 to 75) {
+      ForexIncremental.runSilver(events.filter(col("ts") < lit(before(day))), silverInc)
+      ForexIncremental.runGold(spark, silverInc, goldInc)
+    }
+    ForexIncremental.runSilver(events, silverOnce)
+    ForexIncremental.runGold(spark, silverOnce, goldOnce)
+    val a = sortedRows(IncrementalStore.readTable(spark, goldInc), Seq("dbt_updated_at", "p_date"))
+    val b = sortedRows(IncrementalStore.readTable(spark, goldOnce), Seq("dbt_updated_at", "p_date"))
+    assert(a.size === b.size)
+    assert(a === b)
+  }
 }

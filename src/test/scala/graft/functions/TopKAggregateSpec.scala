@@ -22,7 +22,7 @@ class TopKAggregateSpec extends SparkSpec {
   }
 
   test("topk_by is callable from SQL after extension registration, same plan shape") {
-    graft.GraftExtensions.register(spark)
+    graft.GraftExtensions.install(spark)
     graft.Tables.orders(spark, sf0001).createOrReplaceTempView("topk_orders_v")
     val df = spark.sql(
       """SELECT o_custkey, t.id AS o_orderkey, t.score AS o_totalprice
@@ -39,7 +39,7 @@ class TopKAggregateSpec extends SparkSpec {
   }
 
   test("input coercion: int scores, int ids, and non-int k literals all analyze cleanly") {
-    graft.GraftExtensions.register(spark)
+    graft.GraftExtensions.install(spark)
     import spark.implicits._
     Seq((1, 10, 5L), (1, 20, 3L), (1, 30, 9L), (2, 40, 1L))
       .toDF("grp", "int_score", "id").createOrReplaceTempView("topk_coerce_v")

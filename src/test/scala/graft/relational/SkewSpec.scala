@@ -37,7 +37,7 @@ class SkewSpec extends SparkSpec {
   }
 
   test("vec_dot is callable from SQL after extension registration") {
-    graft.GraftExtensions.register(spark)
+    graft.GraftExtensions.install(spark)
     Tables.embeddings(spark, sf0001).createOrReplaceTempView("emb")
     val r = spark.sql(
       "SELECT vec_dot(embedding, embedding) AS d FROM emb ORDER BY vec_id LIMIT 1")
