@@ -127,10 +127,9 @@ object Tables {
     * has fewer partitions than cores: a single small parquet file reads
     * as ONE byte-sized split, serializing all downstream per-row work
     * (hashing, generators, folds) onto one core. A no-op whenever the
-    * source already has enough splits — i.e. at any real scale. The
-    * shared public form of DocDedup's `spread` (r17); row order is not
-    * preserved, so apply only where consumers are order-free
-    * (aggregates, joins, sorted outputs).
+    * source already has enough splits — i.e. at any real scale. Row
+    * order is not preserved, so apply only where consumers are
+    * order-free (aggregates, joins, sorted outputs).
     */
   def spread(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism

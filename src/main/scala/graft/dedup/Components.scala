@@ -20,9 +20,9 @@ import org.apache.spark.sql.functions._
   * the component diameter. Near-dup components are shallow by construction
   * (stars around a template doc), so 2-4 rounds close real corpora; the
   * loop still runs to the provable fixpoint rather than assuming so. Each
-  * round's labels land in scratch parquet (DocDedup.scratchTable): lineage
+  * round's labels land in scratch parquet (graft.Fixpoint): lineage
   * stays O(1) deep per round instead of re-deriving the whole pair pipeline
-  * per iteration, and the convergence check is a cheap columnar scan. For
+  * per iteration, and the convergence count is observed on that write. For
   * graphs with long chains at extreme scale, swap the per-round rule for
   * large-star/small-star (Kiveris et al., "Connected Components in
   * MapReduce and Beyond", SoCC'14) — O(log n) rounds, same join shape, same
@@ -52,37 +52,27 @@ object Components {
     // The edge relation is re-joined every round: materialize it once so
     // the (possibly expensive — e.g. LSH banded-join) edge derivation runs
     // exactly once, not once per round.
-    val bidir = DocDedup.scratchTable(
+    val bidir = graft.Scratch.table(
       edges.select(col("a").as("src"), col("b").as("dst"))
         .union(edges.select(col("b").as("src"), col("a").as("dst")))
         .distinct(), "cc-edges")
 
-    var labels = vertices.select(col("v"), col("v").as("label"))
-    var converged = false
-    var rounds = 0
-    while (!converged) {
+    // the convergence check rides the round's write as an observed metric
+    // (graft.Fixpoint): the changed-label count is collected DURING the
+    // write, so each round is exactly one job
+    graft.Fixpoint.iterate(vertices.select(col("v"), col("v").as("label")),
+        "cc-labels", Int.MaxValue) { (labels, _) =>
       val neighborMin = bidir
         .join(labels, bidir("src") === labels("v"))
         .groupBy(col("dst"))
         .agg(min(col("label")).as("nmin"))
-      val next = labels
+      labels
         .join(neighborMin, labels("v") === neighborMin("dst"), "left")
         .select(col("v"), col("label").as("old_label"),
           least(col("label"), coalesce(col("nmin"), col("label"))).as("label"))
-      // the convergence check rides the round's write as an observed
-      // metric (r18; was a separate post-write scan job per round — the
-      // sssp fused-fixpoint treatment applied here): changed-label count
-      // is collected DURING the write, so each round is exactly one job
-      val obs = org.apache.spark.sql.Observation()
-      val mat = DocDedup.scratchTable(
-        next.observe(obs,
-          count(when(col("label") =!= col("old_label"), 1)).as("chg")),
-        "cc-labels")
-      converged = obs.get("chg").asInstanceOf[Long] == 0L
-      labels = mat.select(col("v"), col("label"))
-      rounds += 1
-    }
-    (labels, rounds)
+        .select(col("v"), col("label"),
+          (col("label") =!= col("old_label")).cast("int").as("delta"))
+    }(_.longValue == 0L)
   }
 
   /** Large-star/small-star connected components (Kiveris et al., "Connected
@@ -109,7 +99,7 @@ object Components {
 
   def connectedComponentsStarCounted(vertices: DataFrame,
       edges: DataFrame): (DataFrame, Int) = {
-    var e = DocDedup.scratchTable(
+    var e = graft.Scratch.table(
       edges.select(least(col("a"), col("b")).as("u"),
           greatest(col("a"), col("b")).as("v"))
         .filter(col("u") =!= col("v")).distinct(), "ccs-edges")
@@ -131,7 +121,7 @@ object Components {
       // itself links to the minimum
       val dirDown = large.select(col("v").as("x"), col("u").as("y")) // y < x
       val minsS = dirDown.groupBy(col("x")).agg(min(col("y")).as("m"))
-      val next = DocDedup.scratchTable(
+      val next = graft.Scratch.table(
         dirDown.join(minsS, "x")
           .select(least(col("y"), col("m")).as("u"),
             greatest(col("y"), col("m")).as("v"))

@@ -33,20 +33,9 @@ object DocDedup {
       .groupBy("fp")
       .agg(count(lit(1)).as("n_docs"), min("doc_id").as("keep_doc_id"))
 
-  /** Spread per-row hash-heavy work across the cluster when the scan has
-    * fewer partitions than cores (a single small parquet file reads as ONE
-    * partition, serializing all downstream per-row crypto onto one core —
-    * observed 30x+ on the driver bench). A no-op whenever the source
-    * already has enough splits, i.e. at any real scale.
-    */
-  private def spread(docs: DataFrame): DataFrame = {
-    val target = docs.sparkSession.sparkContext.defaultParallelism
-    if (docs.rdd.getNumPartitions < target) docs.repartition(target) else docs
-  }
-
   /** (doc_id, pos, word) exploded normalized words. */
   private def explodedWords(docs: DataFrame): DataFrame =
-    spread(docs).select(col("doc_id"),
+    graft.Tables.spread(docs).select(col("doc_id"),
       posexplode(TextAnalysis.words(col("text"))).as(Seq("pos", "word")))
 
   /** (doc_id, shingle) word 3-gram shingles, exploded.
@@ -64,7 +53,7 @@ object DocDedup {
     */
   def shingles(docs: DataFrame, n: Int = 3): DataFrame = {
     val parts = (0 until n).map(i => if (i == 0) "w[i]" else s"w[i+$i]").mkString(", ")
-    spread(docs)
+    graft.Tables.spread(docs)
       .withColumn("w", TextAnalysis.words(col("text")))
       .select(col("doc_id"), explode(expr(
         s"""CASE WHEN size(w) >= $n
@@ -93,13 +82,6 @@ object DocDedup {
         (1 until NumHashes).map(j =>
           min(md5(concat(lit(s"$j:"), col("shingle")))).as(s"mh_$j")): _*)
 
-  /** See graft.Scratch — write-once-read-many scratch parquet for derived
-    * relations referenced by multiple downstream subtrees (the signature
-    * table, shingle sets, per-round component labels).
-    */
-  private[dedup] def scratchTable(df: DataFrame, tag: String): DataFrame =
-    graft.Scratch.table(df, tag)
-
   /** Signature relation for multi-branch pair queries.
     *
     * The banded self-join plus signature re-join references this subtree up
@@ -111,7 +93,7 @@ object DocDedup {
     * that survives both: compute once, scan cheaply, no pinned memory.
     */
   private def materializedSignatures(docs: DataFrame): DataFrame =
-    scratchTable(minhashSignatures(docs), "minhash-sigs")
+    graft.Scratch.table(minhashSignatures(docs), "minhash-sigs")
 
   /** Estimated AND exact Jaccard side by side for every LSH candidate pair,
     * from ONE signature scratch, ONE banded self-join, and ONE shingle-set
@@ -124,7 +106,7 @@ object DocDedup {
   def estVsExactPairs(docs: DataFrame): DataFrame = {
     val sigs = materializedSignatures(docs)
     val pairs = pairsFromSigs(sigs)
-    val docSets = scratchTable(shingleSets(docs), "shingle-sets")
+    val docSets = graft.Scratch.table(shingleSets(docs), "shingle-sets")
     val eqCount = (0 until NumHashes)
       .map(j => when(col(s"a.mh_$j") === col(s"b.mh_$j"), 1).otherwise(0))
       .reduce(_ + _)
@@ -252,7 +234,7 @@ object DocDedup {
       // scratch: consumed by the self-join (twice) + the cross join + the
       // store append; without it the scan→shingle→minhash lineage would
       // run 4x per batch
-      val bands = scratchTable(bandsOf(minhashSignatures(docs)), s"inc-bands-$i")
+      val bands = graft.Scratch.table(bandsOf(minhashSignatures(docs)), s"inc-bands-$i")
       val self = bands.as("l").join(bands.as("r"),
           col("l.band_idx") === col("r.band_idx") &&
           col("l.band_key") === col("r.band_key") &&
@@ -309,8 +291,8 @@ object DocDedup {
     val bandsPath = s"$storeDir/bands"
     var labelsPath: Option[String] = None
     batches.zipWithIndex.foreach { case (docs, i) =>
-      val sigsN = scratchTable(minhashSignatures(docs), s"incc-sigs-$i")
-      val bandsN = scratchTable(bandsOf(sigsN), s"incc-bands-$i")
+      val sigsN = graft.Scratch.table(minhashSignatures(docs), s"incc-sigs-$i")
+      val bandsN = graft.Scratch.table(bandsOf(sigsN), s"incc-bands-$i")
       val self = bandsN.as("l").join(bandsN.as("r"),
           col("l.band_idx") === col("r.band_idx") &&
           col("l.band_key") === col("r.band_key") &&
@@ -423,7 +405,7 @@ object DocDedup {
     // referenced by both join sides AND rebuilt from the same shingle
     // explode the signatures use — scratch-materialized for the same
     // reason as materializedSignatures
-    val docSets = scratchTable(shingleSets(docs), "shingle-sets")
+    val docSets = graft.Scratch.table(shingleSets(docs), "shingle-sets")
     val nCommon = size(array_intersect(col("za.shs"), col("zb.shs")))
     lshCandidatePairs(docs)
       .join(docSets.as("za"), col("doc_id_a") === col("za.doc_id"))

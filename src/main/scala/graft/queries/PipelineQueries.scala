@@ -2,8 +2,9 @@ package graft.queries
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
 import graft.{PipelineRunner, Tables}
 import graft.ingest.Ingest
@@ -41,12 +42,44 @@ object PipelineQueries {
   private[queries] def streamShufflePartitions(s: SparkSession): String =
     s.conf.getOption("spark.graft.stream.shufflePartitions").getOrElse("4")
 
+  /** The bounded-stream driver: every `Trigger.AvailableNow` run of the
+    * query families goes through here. It stops any prior run of `name`,
+    * sets the streaming shuffle width ([[streamShufflePartitions]] —
+    * streaming disables AQE, so nothing coalesces the session's width
+    * for a few hundred windows), builds `writer` (so sink-side resets
+    * inside it never race a prior run), starts it as query `name`, and
+    * waits up to 300 s. On timeout it stops the query and throws: a
+    * timed-out run would otherwise hand back a silently partial sink.
+    * The session's shuffle width is restored however the run ends.
+    * Returns the finished query.
+    */
+  private[queries] def runBounded(s: SparkSession, name: String,
+      writer: => DataStreamWriter[Row]): StreamingQuery = {
+    s.streams.active.filter(_.name == name).foreach(_.stop())
+    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
+    s.conf.set("spark.sql.shuffle.partitions", streamShufflePartitions(s))
+    try {
+      val q = writer.queryName(name).trigger(Trigger.AvailableNow()).start()
+      if (!q.awaitTermination(300000)) {
+        q.stop()
+        throw new IllegalStateException(
+          s"$name did not finish within 300s (a timed-out run would " +
+            "otherwise return a silently partial result)")
+      }
+      q
+    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+  }
+
+  /** Delete `path` recursively if it exists. */
+  private[queries] def deleteDir(s: SparkSession, path: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+  }
+
   /** Fresh scratch dir per query run (idempotent re-runs). */
   private def scratch(spark: SparkSession, name: String): String = {
     val dir = StoreQueries.scratchPath(spark, s"graft_pipeline/$name")
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
+    deleteDir(spark, dir)
     dir
   }
 
@@ -231,27 +264,10 @@ object PipelineQueries {
   val streamOhlc1h: Q = (s, dir) => {
     val base = silverStreamSource(s, dir)
     val name = "graft_stream_ohlc_1h"
-    s.streams.active.filter(_.name == name).foreach(_.stop())
-    // the stateful agg creates one state-store instance (with per-batch
-    // delta + commit files) per shuffle partition; 720 windows need 8, not
-    // 32 — streaming disables AQE, so nothing coalesces this for us
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", streamShufflePartitions(s))
-    try {
-      val q = graft.streaming.ForexStream
-        .candlesComplete(graft.streaming.ForexStream.ticks(s, base),
-          graft.forex.Resample.byName("1h"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      if (!q.awaitTermination(300000)) {
-        q.stop() // never leak a running stream into later queries' conf changes
-        throw new IllegalStateException(
-          s"stream_ohlc_1h did not finish within 300s (a timed-out run would " +
-            "otherwise return a silently partial memory-sink table)")
-      }
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    runBounded(s, name, graft.streaming.ForexStream
+      .candlesComplete(graft.streaming.ForexStream.ticks(s, base),
+        graft.forex.Resample.byName("1h"))
+      .writeStream.format("memory").outputMode("complete"))
     s.table(name).orderBy(col("candle_start"))
   }
 
@@ -393,21 +409,12 @@ object PipelineQueries {
   val streamToStore: Q = (s, dir) => {
     val base = silverStreamSource(s, dir)
     val store = scratch(s, "stream_to_store_tbl")
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", streamShufflePartitions(s))
-    try {
-      val q = graft.streaming.ForexStream.writeToStore(
+    runBounded(s, "graft_stream_to_store",
+      graft.streaming.ForexStream.writeToStore(
           graft.streaming.ForexStream.candlesComplete(
             graft.streaming.ForexStream.ticks(s, base),
             graft.forex.Resample.byName("1h")), store)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("stream_to_store did not finish within 300s")
-      }
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+        .outputMode("complete"))
     IncrementalStore.readTable(s, store)
       .select(col("timeframe"), col("candle_start"), col("open_price"),
         col("high_price"), col("low_price"), col("close_price"),
@@ -500,29 +507,12 @@ object PipelineQueries {
        |      (SELECT min(epoch_us(CAST(ts AS TIMESTAMP))) + 10 * 86400000000 FROM events)
        |ORDER BY observed_at""".stripMargin
 
-  /** Bounded-run harness shared by the round-4 streaming queries: stop any
-    * prior run of `name`, drop state-store partitions to 8 (streaming
-    * disables AQE; 32 state stores for a few hundred windows is pure
-    * overhead), run to completion under AvailableNow, restore the conf.
+  /** Bounded complete/update/append-mode stream into the `memory` sink
+    * (table `name`), run through [[runBounded]]; returns the table.
     */
   private[queries] def runBoundedStream(s: SparkSession, name: String,
       build: () => DataFrame, mode: String): DataFrame = {
-    s.streams.active.filter(_.name == name).foreach(_.stop())
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", streamShufflePartitions(s))
-    try {
-      val q = build()
-        .writeStream.format("memory").queryName(name)
-        .outputMode(mode)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException(
-          s"$name did not finish within 300s (a timed-out run would " +
-            "otherwise return a silently partial memory-sink table)")
-      }
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    runBounded(s, name, build().writeStream.format("memory").outputMode(mode))
     s.table(name)
   }
 
@@ -537,30 +527,14 @@ object PipelineQueries {
     */
   private[queries] def runBoundedStreamToSink(s: SparkSession, name: String,
       build: () => DataFrame): DataFrame = {
-    s.streams.active.filter(_.name == name).foreach(_.stop())
     val target = StoreQueries.scratchPath(s, s"graft_pipeline/sink_$name")
     val ckpt = s"${target}_ckpt"
-    val fs = new org.apache.hadoop.fs.Path(target)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(target), true)
-    fs.delete(new org.apache.hadoop.fs.Path(ckpt), true)
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", streamShufflePartitions(s))
-    try {
-      val q = build()
-        .writeStream.format("graft-sink")
+    runBounded(s, name, {
+      Seq(target, ckpt).foreach(deleteDir(s, _))
+      build().writeStream.format("graft-sink")
         .option("path", target).option("checkpointLocation", ckpt)
-        .queryName(name)
         .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException(
-          s"$name did not finish within 300s (a timed-out run would " +
-            "otherwise return a silently partial sink table)")
-      }
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    })
     s.read.format("graft-sink").load(target)
   }
 
@@ -690,35 +664,19 @@ object PipelineQueries {
       // commutative sketch families. Identity for plain day-keyed rows.
       perBatch: (DataFrame, Long, String) => DataFrame = (b, _, _) => b,
       retentionFloor: Option[java.time.LocalDate] = None): DataFrame = {
-    s.streams.active.filter(_.name == name).foreach(_.stop())
-    val target = StoreQueries.freshStoreRoot(s, name.stripPrefix("graft_"))
+    val target = StoreQueries.storeRoot(s, name.stripPrefix("graft_"))
     val ckpt = StoreQueries.scratchPath(s, s"graft_pipeline/ckpt_$name")
-    val fs = new org.apache.hadoop.fs.Path(ckpt)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(ckpt), true)
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", streamShufflePartitions(s))
-    try {
-      val mergeDays: (DataFrame, Long) => Unit = (batch, bid) =>
-        IncrementalStore.mergeBatchDayPartitions(
-          perBatch(batch, bid, target), bid, target, dayCol,
-          clusterBy = clusterBy, retentionFloor = retentionFloor)
-      val q = source()
-        .writeStream
-        .foreachBatch(mergeDays)
+    val mergeDays: (DataFrame, Long) => Unit = (batch, bid) =>
+      IncrementalStore.mergeBatchDayPartitions(
+        perBatch(batch, bid, target), bid, target, dayCol,
+        clusterBy = clusterBy, retentionFloor = retentionFloor)
+    runBounded(s, name, {
+      Seq(target, ckpt).foreach(deleteDir(s, _))
+      source().writeStream.foreachBatch(mergeDays)
         .option("checkpointLocation", ckpt)
-        .queryName(name)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException(
-          s"$name did not finish within 300s (a timed-out run would " +
-            "otherwise return a silently partial store table)")
-      }
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    })
     val tp = new org.apache.hadoop.fs.Path(target)
-    if (!fs.exists(tp))
+    if (!tp.getFileSystem(s.sparkContext.hadoopConfiguration).exists(tp))
       // a source that delivered zero rows (or whose rows all fell below
       // the retention floor) never created the table — fail with the
       // story rather than a schema-inference error on an absent path

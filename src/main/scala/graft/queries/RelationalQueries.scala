@@ -3107,16 +3107,15 @@ object RelationalQueries {
     * Σ|Δ|/scale < eps. Deterministic on every engine and partitioning —
     * the same property that makes the fixed-round oracle hash-stable.
     *
-    * Each round's rank vector is scratch-materialized before the delta
-    * action — the delta is a second consumer of the same round, and
-    * without materialization each round's action would replay the whole
-    * lineage (O(rounds²) work); with it, plan depth stays O(1) per round
-    * at any round count.
+    * Rounds run through [[graft.Fixpoint.iterate]]: each round's rank
+    * vector is scratch-materialized with Σ|Δ| observed on that write (one
+    * job per round), so plan depth stays O(1) per round at any round
+    * count.
     *
     * Scale shape per round: identical to [[pagerankRanks]] (one
     * co-partitioned join + one map-side-partial sum) plus one |V|-row
-    * co-partitioned self-join for the delta — still no per-group state
-    * anywhere. The returned frame is formatted exactly like the
+    * join against the previous ranks for the delta — still no per-group
+    * state anywhere. The returned frame is formatted exactly like the
     * fixed-round queries, and PagerankSpec pins
     * `pagerankRanksUntil(...) == pagerankRanks(_, _, roundsRun)`.
     */
@@ -3130,20 +3129,16 @@ object RelationalQueries {
     val bc = broadcastIfAtMost(nV, GraphBroadcastRowLimit) _
     def q(c: org.apache.spark.sql.Column) =
       floor(c * lit(scale) + lit(0.5)).cast(DecimalType(20, 0))
-    var ranks = graft.Scratch.table(verts.withColumn("rank", lit(1.0)), "pr-r0")
-    var rounds = 0
-    var converged = false
-    while (!converged && rounds < maxRounds) {
-      val next = graft.Scratch.table(prRound(eo, ranks, scale, bc), "pr-it")
-      rounds += 1
-      val l1Scaled = Option(next.select(col("v"), col("rank").as("r_new"))
-        .join(ranks.select(col("v"), col("rank").as("r_old")), "v")
-        .agg(sum(abs(q(col("r_new")) - q(col("r_old")))).as("d"))
-        .head().getDecimal(0))
-      // sum over zero vertices is NULL ⇒ empty graph ⇒ trivially converged
-      converged = l1Scaled.forall(_.doubleValue() / scale < eps)
-      ranks = next
-    }
+    val r0 = graft.Scratch.table(verts.withColumn("rank", lit(1.0)), "pr-r0")
+    // the old rank joins INTO the round's write (left from the new ranks,
+    // so no new-state row is lost) and Σ|Δ| is observed on it; an empty
+    // graph observes 0 ⇒ trivially converged
+    val (ranks, rounds) = graft.Fixpoint.iterate(r0, "pr-it", maxRounds) { (ranks, _) =>
+      prRound(eo, ranks, scale, bc)
+        .join(bc(ranks.select(col("v"), col("rank").as("r_old"))), Seq("v"), "left")
+        .select(col("v"), col("rank"),
+          abs(q(col("rank")) - q(col("r_old"))).as("delta"))
+    }(_.doubleValue() / scale < eps)
     (prFinish(ranks), rounds)
   }
 
@@ -3194,13 +3189,14 @@ object RelationalQueries {
       "ppr-edges")
     val nSeeds = baseDf.filter(col("is_seed") === 1).count()
     require(nSeeds > 0, "ppr_segment: empty seed segment")
-    val scale = prQuantScale(verts.count())
+    val nV = verts.count()
+    val scale = prQuantScale(nV)
     var ranks = baseDf.select(col("v"),
       when(col("is_seed") === 1, lit(1.0) / lit(nSeeds.toDouble))
         .otherwise(lit(0.0)).as("rank"))
     // same |V|-gated rank-side broadcast as pagerankRanks: without it the
     // planner broadcast-builds the scratch edge relation every round
-    val bcR = broadcastIfAtMost(verts.count(), GraphBroadcastRowLimit) _
+    val bcR = broadcastIfAtMost(nV, GraphBroadcastRowLimit) _
     for (_ <- 1 to 5) {
       ranks = eoS.join(bcR(ranks), eoS("src") === ranks("v"))
         .select(col("dst"), col("dst_seed"),
@@ -3913,9 +3909,9 @@ object RelationalQueries {
     * against the accumulated label set — all key-shuffles, nothing
     * broadcast (frontiers start seed-sized but grow toward |V|, so hints
     * would be the graph_triangles mistake; the planner/AQE picks the
-    * strategy). The frontier count is the per-round driver scalar (the
-    * fixpoint check), and `dist` scratch-materializes per round, capping
-    * lineage depth at one round.
+    * strategy). The frontier size, observed on the frontier's own
+    * scratch write, is the per-round driver scalar (the fixpoint check);
+    * `dist` is a lazy union of the per-hop scratch tables.
     */
   def bfsHops(s: SparkSession, dir: String, maxHops: Int = 4): DataFrame = {
     val half = partsHalfEdges(s, dir)
@@ -3936,8 +3932,9 @@ object RelationalQueries {
         .select(col("dst").as("x")).distinct()
         .join(dist, Seq("x"), "left_anti")
         .select(col("x"), lit(hop.toLong).as("hop"))
-      val fresh = graft.Scratch.table(next, s"bfs-d$hop")
-      if (fresh.isEmpty) done = true
+      // the frontier size is observed on its own write (graft.Fixpoint)
+      val (fresh, size) = graft.Fixpoint.observedTable(next, s"bfs-d$hop", count(lit(1)))
+      if (size.longValue == 0L) done = true
       else {
         // dist stays a LAZY union of the per-hop scratch tables (r17):
         // the accumulator was re-written to scratch every round, a write
@@ -4106,28 +4103,18 @@ object RelationalQueries {
       .withColumn("w", lit(1L) + pmod(col("src") + col("dst"), lit(7L)))
     val seeds = edges.select(col("src").as("x")).distinct()
       .orderBy(col("x")).limit(3)
-    var dist = graft.Scratch.table(
+    val d0 = graft.Scratch.table(
       seeds.select(col("x"), lit(0L).as("d")), "sssp-d0")
-    var round = 1
-    var done = false
-    while (!done && round <= maxRounds) {
+    // the changed count rides INSIDE the round's one scratch write
+    // (graft.Fixpoint): the old distance joins into the same write
+    val (dist, _) = graft.Fixpoint.iterate(d0, "sssp-d", maxRounds) { (dist, _) =>
       val relaxed = dist.join(edges, dist("x") === edges("src"))
         .select(col("dst").as("x"), (col("d") + col("w")).as("d"))
-      // the fixpoint flag rides INSIDE the round's one scratch write (the
-      // labelPropagate pattern, r17): the old form ran a second
-      // join-and-count job per round over the just-written table; now the
-      // old distance joins into the same write and the check is a
-      // columnar scan of the chg column.
-      val mat = graft.Scratch.table(
-        dist.unionAll(relaxed).groupBy(col("x")).agg(min(col("d")).as("d"))
-          .join(dist.select(col("x"), col("d").as("d0")), Seq("x"), "left_outer")
-          .select(col("x"), col("d"),
-            (col("d0").isNull || col("d") < col("d0")).as("chg")),
-        s"sssp-d$round")
-      val changed = !mat.filter(col("chg")).isEmpty
-      dist = mat.select(col("x"), col("d"))
-      if (!changed) done = true else round += 1
-    }
+      dist.unionAll(relaxed).groupBy(col("x")).agg(min(col("d")).as("d"))
+        .join(dist.select(col("x"), col("d").as("d0")), Seq("x"), "left_outer")
+        .select(col("x"), col("d"),
+          (col("d0").isNull || col("d") < col("d0")).cast("int").as("delta"))
+    }(_.longValue == 0L)
     dist.groupBy(col("d"))
       .agg(count(lit(1)).as("n_parts"),
         min(col("x")).as("min_part"), max(col("x")).as("max_part"))
@@ -4314,14 +4301,13 @@ object RelationalQueries {
     var done = n == 0
     while (!done && r <= maxRounds) {
       // the fixpoint count rides the keep write as an observed metric
-      // (r18; was a separate count() job per round — cheap on parquet
-      // footers, but each job carries ~50-100 ms of driver round-trip in
-      // a 7-round cascade)
-      val obs = org.apache.spark.sql.Observation()
-      val keep = graft.Scratch.table(
-        degrees(e).filter(col("dg") >= k).select(col("x"))
-          .observe(obs, count(lit(1)).as("kept")), s"kcore-k$r")
-      val kept = obs.get("kept").asInstanceOf[Long]
+      // (graft.Fixpoint): a separate count() job, cheap on parquet
+      // footers, would still carry ~50-100 ms of driver round-trip per
+      // round of a 7-round cascade
+      val (keep, keptN) = graft.Fixpoint.observedTable(
+        degrees(e).filter(col("dg") >= k).select(col("x")), s"kcore-k$r",
+        count(lit(1)))
+      val kept = keptN.longValue
       if (kept == prevKept) done = true
       else {
         // kept is already a driver scalar (the fixpoint check), so the
@@ -4408,14 +4394,13 @@ object RelationalQueries {
     */
   private[graft] def labelPropagate(
       edges: DataFrame, maxRounds: Int): (DataFrame, Int) = {
-    var labels = graft.Scratch.table(
+    val l0 = graft.Scratch.table(
       edges.select(col("src").as("v")).distinct().withColumn("label", col("v")),
       "lpa-l0")
-    var r = 0
-    var converged = false
-    while (r < maxRounds && !converged) {
-      val upd = edges.join(labels.select(col("v"), col("label")),
-          edges("src") === col("v"))
+    // the changed-label count rides the round's one scratch write
+    // (graft.Fixpoint), not a second scan job per round
+    graft.Fixpoint.iterate(l0, "lpa-l", maxRounds) { (labels, _) =>
+      edges.join(labels, edges("src") === col("v"))
         .groupBy(col("dst"), col("label")).agg(count(lit(1)).as("cnt"))
         .groupBy(col("dst"))
         // hash-aggregable argmax (r17): max_by over struct(cnt, -label)
@@ -4427,20 +4412,10 @@ object RelationalQueries {
         .agg(graft.functions.LexMinAggregate
           .argMinLong(-col("cnt"), col("label")).as("label"))
         .select(col("dst").as("v"), col("label"))
-      // the change flag rides INSIDE the round's one scratch write (the
-      // Components pattern), so the fixpoint check is a columnar scan of
-      // the just-written labels, not a second join job per round
-      val mat = graft.Scratch.table(
-        upd.join(labels.select(col("v"), col("label").as("old_label")), Seq("v"))
-          .select(col("v"), col("label"),
-            (col("label") =!= col("old_label")).as("chg")), s"lpa-l${r + 1}")
-      r += 1
-      // the check drives CONTROL FLOW only, so the last round skips it —
-      // no further round could run either way
-      if (r < maxRounds) converged = mat.filter(col("chg")).isEmpty
-      labels = mat
-    }
-    (labels.select(col("v"), col("label")), r)
+        .join(labels.select(col("v"), col("label").as("old_label")), Seq("v"))
+        .select(col("v"), col("label"),
+          (col("label") =!= col("old_label")).cast("int").as("delta"))
+    }(_.longValue == 0L)
   }
 
   val labelProp: Q = (s, dir) => {
